@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** The bench's self-defense rules (r12), pure so the spec can drive
   * them synthetically. Two independent suspicion triggers send a
@@ -171,6 +172,10 @@ object BenchRules {
   * per-query min / retry values for the flagged queries.
   */
 object Bench {
+  private def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(
+      s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -187,21 +192,13 @@ object Bench {
       spark.range(1000000).selectExpr("sum(id)").collect()
       SparkEntry.queries.get("q_pricing_summary")
         .foreach(fn => fn(spark, sfDir).count())
-    } catch { case _: Throwable => () }
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    } catch { case NonFatal(e) => reportFailure("warmup", e) }
+    // a failed run times as -1; its cause goes to stderr
+    def once(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try SparkEntry.queries(name)(spark, sfDir).count()
+      catch { case NonFatal(e) => reportFailure(name, e); return -1.0 }
       (System.nanoTime() - t0) / 1e9
-    }
-    def releasePerQueryCaches(): Unit = {
-      // per-invocation dedup/mixing caches must not accumulate across
-      // the full query sweep
-      graft.llm.Dedup.releaseCaches()
-      graft.llm.Mixing.releaseCaches()
-      graft.llm.Lines.releaseCaches()
-      graft.llm.Bpe.releaseCaches()
-      graft.llm.LanguageModel.releaseCaches()
-      graft.llm.Unigram.releaseCaches()
     }
     // Contention canary: three cheap, plan-stable queries (scan+agg,
     // filter, explode+agg shapes) timed as one probe. All plans are
@@ -212,7 +209,7 @@ object Bench {
     // survivors of a partial failure would make probe points
     // incomparable (2-query vs 3-query totals) and fake/mask drift
     def canaryPass(): Double = {
-      val ts = canaryNames.flatMap(SparkEntry.queries.get).map(fn => once(fn))
+      val ts = canaryNames.filter(SparkEntry.queries.contains).map(once)
       if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else ts.sum
     }
     // each probe point = min of two back-to-back passes, so a single
@@ -254,9 +251,11 @@ object Bench {
     // and the median of the remaining steady-state runs absorbs one-off
     // GC/scheduler noise that min-of-two let through. Cold-start
     // behavior is characterized separately in README/SCALING.md.
-    val results = selected.map { case (name, fn) =>
-      val runs = Seq(once(fn), once(fn), once(fn))
-      releasePerQueryCaches()
+    val results = selected.map { case (name, _) =>
+      val runs = Seq(once(name), once(name), once(name))
+      // per-invocation operator caches must not accumulate across the
+      // full query sweep
+      Caches.releaseAll()
       i += 1
       if (canaryOn && i == half) canaryMid = canaryProbe()
       val failed = runs.exists(_ < 0)
@@ -280,8 +279,8 @@ object Bench {
     val retryTriples = BenchRules.retryList(results.toSeq, baseline)
       .map { name =>
         val probe = if (canaryOn) canaryProbe() else -1.0
-        val t = once(selected(name))
-        releasePerQueryCaches()
+        val t = once(name)
+        Caches.releaseAll()
         (name, t, probe)
       }
     val retries = retryTriples.map { case (n, t, _) => n -> t }

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -24,17 +25,13 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
-      // the dedup/mixing operators persist per-invocation intermediates;
-      // a driver running all queries must not accumulate every cache
-      graft.llm.Dedup.releaseCaches()
-      graft.llm.Mixing.releaseCaches()
-      graft.llm.Lines.releaseCaches()
-      graft.llm.Bpe.releaseCaches()
-      graft.llm.LanguageModel.releaseCaches()
-      graft.llm.Unigram.releaseCaches()
+      // the corpus operators persist per-invocation intermediates; a
+      // driver running all queries must not accumulate every cache
+      Caches.releaseAll()
     }
     graft.llm.Similarity.clearIvfCache()
     graft.llm.Similarity.clearPqCache()

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Caches
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,32 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Checkpoint tracking: [[applyMerges]] and [[encodeDocs]] pin
-    * localCheckpoints of the word table (a few MB-GB, bounded by
-    * distinct-word cardinality). Unlike [[Dedup.releaseCaches]], a
-    * released CHECKPOINT cannot recompute — call [[releaseCaches]]
-    * only after the consuming action, when the returned frames are
-    * discarded (Verify/Bench do exactly that per query). Without a
-    * release, blocks live until the driver GCs the plan (Spark's
-    * ContextCleaner). */
-  private val trackedCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  private def trackCp(df: DataFrame): DataFrame = {
-    trackedCheckpoints.add(df)
-    df
-  }
-
-  /** Unpersist every checkpoint pinned since the last release. Only
-    * call once frames returned by this object are no longer needed —
-    * checkpoint-backed frames cannot recompute after release. */
-  def releaseCaches(): Unit = {
-    var df = trackedCheckpoints.poll()
-    while (df != null) {
-      org.apache.spark.sql.graft.Bridge.releaseFrame(df)
-      df = trackedCheckpoints.poll()
-    }
-  }
+  /** [[applyMerges]] and [[encodeDocs]] pin localCheckpoints of the
+    * word table (a few MB-GB, bounded by distinct-word cardinality)
+    * under this object in [[graft.Caches]]; this frees them. A
+    * released checkpoint cannot recompute: call it only once the
+    * frames this object returned are discarded. */
+  def releaseCaches(): Unit = Caches.release(this)
 
   /** (word, freq) over whitespace tokens of the normalized text — the
     * pre-count that makes BPE training corpus-size-independent. */
@@ -273,8 +254,9 @@ object Bpe {
     * — chunking removes the per-row floor instead of shaving its
     * constant, and drops per-merge job count from 4 to 2 (argmax +
     * delta-fused counts update). Merge-sequence equality with
-    * [[trainFullRecount]] is spec-enforced (BpeSpec) and re-asserted
-    * at 2M words inside [[graft.tools.BpeVocabProbe]]. */
+    * [[trainFullRecount]] is spec-enforced (BpeSpec); it was also
+    * re-asserted at 2M words by a one-off `BpeVocabProbe` tool, since
+    * deleted (see git history). */
   private def trainIncrementalFromSyms(syms0: DataFrame, numMerges: Int,
       minCount: Long, compactEvery: Int = 10,
       chunkWords: Long = 1024L,
@@ -482,7 +464,7 @@ object Bpe {
     }
     // the FINAL checkpoint backs the returned frame — it stays pinned
     // until the caller is done (released via [[releaseCaches]])
-    lastCp.foreach(trackCp)
+    lastCp.foreach(Caches.track(this, _))
     cur
   }
 
@@ -558,8 +540,9 @@ object Bpe {
     // output row — measured ~25x on this stage, 15 s -> 0.6 s at sf0.1
     // (cf. the staging pitfall on Dedup.shingleHashRows). Checkpointing
     // ships plain arrays.
-    val segCp = trackCp(applyMerges(initSymbols(wf, marker), merges)
-      .select(col("word"), col("symbols")).localCheckpoint())
+    val segCp = Caches.track(this,
+      applyMerges(initSymbols(wf, marker), merges)
+        .select(col("word"), col("symbols")).localCheckpoint())
     val seg = broadcast(segCp)
     // default-vocab base chars come from the MATERIALIZED word table,
     // not a second wordFreq pass over the corpus

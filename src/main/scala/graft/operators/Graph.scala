@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Shape
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,7 @@ object Graph {
     // letting the planner sort-merge against the stats-free
     // checkpoint; past the gate the shuffle join is the only correct
     // plan
-    val bcastScores = labels.count() <= 5000000L
+    val bcastScores = labels.count() <= Shape.BroadcastRows
     def side(df: DataFrame): DataFrame =
       if (bcastScores) broadcast(df) else df
     var iter = 0
@@ -245,7 +246,7 @@ object Graph {
     // explicitly while the node count is broadcastable (measured on
     // the 591k-edge graded graph: 12.6 s -> ~5 s); beyond the gate
     // the default shuffle join is the only correct plan.
-    val bcastScores = nodes.count() <= 5000000L
+    val bcastScores = nodes.count() <= Shape.BroadcastRows
     def side(df: DataFrame): DataFrame =
       if (bcastScores) broadcast(df) else df
     for (it <- 1 to iterations) {
@@ -365,7 +366,7 @@ object Graph {
     // same stats-blind-checkpoint issue as [[hits]]: without the
     // explicit broadcast the contrib side sort-merges, reshuffling the
     // edge table every round; gate on node count (see hits)
-    val bcastScores = n <= 5000000.0
+    val bcastScores = n <= Shape.BroadcastRows
     def side(df: DataFrame): DataFrame =
       if (bcastScores) broadcast(df) else df
     // r15 restructure: the (node, rank) frame is never materialized
@@ -459,7 +460,8 @@ object Graph {
       sum(expr("d")).cast("long").as("__degsum"))
       .first()
     def side(df: DataFrame): DataFrame =
-      if (statsRow.getAs[Long]("n_nodes") <= 5000000L) broadcast(df) else df
+      if (statsRow.getAs[Long]("n_nodes") <= Shape.BroadcastRows) broadcast(df)
+      else df
     // orient by (degree, id): lower endpoint in that total order
     // becomes the source
     val withDeg = canon
@@ -529,7 +531,7 @@ object Graph {
     // lesson): gate-broadcast the degree sides so the two
     // orientation joins stop shuffling + sorting the edge-sized
     // canon frame twice
-    val bcastDeg = deg.count() <= 5000000L
+    val bcastDeg = deg.count() <= Shape.BroadcastRows
     def side(df: DataFrame): DataFrame = if (bcastDeg) broadcast(df) else df
     val withDeg = canon
       .join(side(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
@@ -614,7 +616,7 @@ object Graph {
     // stats-blind-checkpoint issue (see [[hits]]): broadcast the
     // node-sized label frame explicitly while it is broadcastable;
     // past the gate the shuffle join is the only correct plan
-    val bcastScores = labels.count() <= 5000000L
+    val bcastScores = labels.count() <= Shape.BroadcastRows
     def side(df: DataFrame): DataFrame =
       if (bcastScores) broadcast(df) else df
     for (_ <- 1 to iterations) {
@@ -670,9 +672,6 @@ object Graph {
     * as soon as a round peels nothing. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // nodes peeled this round stay broadcastable below the gate;
-    // above it the anti-joins shuffle (degenerate mass-peel rounds)
-    val broadcastGate = 5000000L
     var live = edges
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
@@ -702,8 +701,11 @@ object Graph {
         // worst-case total stays under one 5M-row broadcast's budget.
         val badA = bad.select(col("__id").as("id_a"))
         val badB = bad.select(col("__id").as("id_b"))
+        // nodes peeled this round stay broadcastable below the gate;
+        // above it the anti-joins shuffle (degenerate mass-peel rounds)
         val (ja, jb) =
-          if (nBad <= broadcastGate / 2) (broadcast(badA), broadcast(badB))
+          if (nBad <= Shape.BroadcastRows / 2)
+            (broadcast(badA), broadcast(badB))
           else (badA, badB)
         val next = live
           .join(ja, Seq("id_a"), "left_anti")
@@ -764,11 +766,10 @@ object Graph {
     // frontier/settled row counts ride the counts the loop already
     // takes (seeds now, nxt per hop), so the gate costs no extra job
     // beyond the one seed count.
-    val broadcastGate = 5000000L
     var nDist = dist.count()
     var nFrontier = nDist
     def side(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastGate) broadcast(df) else df
+      if (n <= Shape.BroadcastRows) broadcast(df) else df
     var h = 1
     var done = false
     while (!done && h <= maxHops) {
@@ -850,13 +851,13 @@ object Graph {
     // broadcastable; its row count rides the count that materializes
     // each round's (now lazy) checkpoint, so the gate costs no extra
     // job beyond the one seed count.
-    val broadcastGate = 5000000L
     var nDist = dist.count()
     var r = 0
     while (r < rounds) {
       val distSide = dist.select(col("id").as("id_a"), col("dist"))
       val relaxed = sym
-        .join(if (nDist <= broadcastGate) broadcast(distSide) else distSide,
+        .join(
+          if (nDist <= Shape.BroadcastRows) broadcast(distSide) else distSide,
           Seq("id_a"))
         .select(col("id_b").as("id"), (col("dist") + col("weight")).as("dist"))
         .unionByName(dist)

@@ -89,20 +89,17 @@ object StreamJobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val served = try serving.read(spark) catch {
-            case _: Throwable => null
-          }
-          if (served != null) {
-            val updated = StreamOps.backfillLabels(served,
-              batch.select(col("symbol"), col("window_start"),
-                col("window_end"), col("label")))
-              // bump the version so the rewrite wins the keyed-merge
-              // against the rows it is correcting (same primary key)
-              .withColumn("version", col("version") + 1)
-            serving.upsert(updated)
-          }
+        // a store not created yet has no rows to back-fill; a read
+        // failure of an existing store must fail the batch
+        if (!batch.isEmpty && serving.exists) {
+          val updated = StreamOps.backfillLabels(
+            serving.read(batch.sparkSession),
+            batch.select(col("symbol"), col("window_start"),
+              col("window_end"), col("label")))
+            // bump the version so the rewrite wins the keyed-merge
+            // against the rows it is correcting (same primary key)
+            .withColumn("version", col("version") + 1)
+          serving.upsert(updated)
         }
       }
       .start()

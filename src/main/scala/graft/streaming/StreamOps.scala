@@ -74,8 +74,9 @@ object StreamOps {
     *
     * State is bounded by watermark horizon x per-bucket volume, and a
     * skewed bucket's spike leaves state whole once the watermark
-    * passes it — both measured, per trigger, in
-    * `tools/R6StreamStateProbe` (SCALING.md round-6 table). Skew note
+    * passes it — both measured, per trigger, by the one-off
+    * `R6StreamStateProbe` tool (SCALING.md round-6 table; the tool
+    * itself is in git history). Skew note
     * for cluster duty: the join hash-partitions on the bucket struct,
     * so one hot minute lands on one task's state store. If per-minute
     * volume can exceed an executor's state budget, use
@@ -179,8 +180,9 @@ object StreamOps {
     * cells and the right side is replicated into EVERY cell, so each
     * (left, right) pair meets exactly once at key (bucket, cell).
     * A hot minute's left-side state then spreads across `salt` state
-    * partitions instead of one (measured: R6StreamStateProbe salted
-    * mode, SCALING.md), at the documented cost of `salt`-way duplicate
+    * partitions instead of one (measured: the salted mode of the
+    * one-off R6StreamStateProbe, SCALING.md; the tool is in git
+    * history), at the documented cost of `salt`-way duplicate
     * right-side routing — the right trade when left volume dwarfs
     * right volume (tick streams vs reference feeds). Watermark
     * eviction is unchanged: cleanup keys on the window bucket, which

@@ -41,7 +41,7 @@ object R11AnsiSweep {
           fn(spark, sfDir).foreach(_ => ())
           ok += 1
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             val root = {
               var c: Throwable = e
               while (c.getCause != null && c.getCause != c) c = c.getCause
@@ -52,12 +52,7 @@ object R11AnsiSweep {
                 Option(root.getMessage).getOrElse("").linesIterator
                   .take(1).mkString.take(160))
         }
-        graft.llm.Dedup.releaseCaches()
-        graft.llm.Mixing.releaseCaches()
-        graft.llm.Lines.releaseCaches()
-        graft.llm.Bpe.releaseCaches()
-        graft.llm.LanguageModel.releaseCaches()
-        graft.llm.Unigram.releaseCaches()
+        graft.Caches.releaseAll()
     }
     graft.llm.Similarity.clearIvfCache()
     graft.llm.Similarity.clearPqCache()

@@ -576,9 +576,9 @@ class DedupSimilaritySpec extends SparkSpec {
   test("tracked dedup caches drain after releaseCaches") {
     Dedup.releaseCaches() // start clean regardless of suite order
     Dedup.minhashClusters(docs, "doc_id", "text").count()
-    assert(Dedup.trackedCacheCount > 0, "minhashClusters should track its persist")
+    assert(Caches.count(Dedup) > 0, "minhashClusters should track its persist")
     Dedup.releaseCaches()
-    assert(Dedup.trackedCacheCount == 0, "release must drain the queue")
+    assert(Caches.count(Dedup) == 0, "release must drain the queue")
   }
 
   test("contamination: full overlap = 1.0, disjoint = 0.0, partial in between") {

@@ -3,8 +3,9 @@ package graft
 import graft.ml.ModelStore
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** End-to-end §3.1 topology: trainer -> predictor -> label updater over
   * one MemoryStream feed, exactly the reference's three-query session.
@@ -73,6 +74,41 @@ class StreamJobsSpec extends SparkSpec {
     // served rows fall inside the 200.0-avg windows -> labels rewritten
     val labels = after.select("label").as[Double].collect().distinct
     assert(labels.forall(_ == 200.0), s"labels not backfilled: ${labels.toSeq}")
+  }
+
+  /** A serving store whose `read` always fails. */
+  private final class FailingReadStore(override val exists: Boolean)
+      extends KeyedStore {
+    @volatile var upserts = 0
+    override def read(spark: SparkSession): DataFrame =
+      throw new IllegalStateException("serving store read failed")
+    override def upsert(batch: DataFrame): Unit = upserts += 1
+  }
+
+  private def runUpdater(store: KeyedStore): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ticks.MarketTickTuple]
+    mem.addData((0 until 10).map(i => tick(base + i * 60000L, 200.0)))
+    val updater = StreamJobs.labelUpdater(
+      StreamOps.windowedFeatureAvg()(feed(mem)), store,
+      tmpDir("lbl_ckpt"), Trigger.ProcessingTime(10L))
+    try updater.processAllAvailable()
+    finally updater.stop()
+  }
+
+  test("labelUpdater: a read failure of an existing store fails the query") {
+    val store = new FailingReadStore(exists = true)
+    val e = intercept[StreamingQueryException](runUpdater(store))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.getMessage == "serving store read failed"),
+      s"the read failure must be the query's cause: $e")
+    assert(store.upserts == 0)
+  }
+
+  test("labelUpdater: a store that does not exist yet skips the batch") {
+    val store = new FailingReadStore(exists = false)
+    runUpdater(store)
+    assert(store.upserts == 0)
   }
 
   test("scoreDual joins stream and history predictions per key") {
